@@ -87,6 +87,10 @@ object GraftFunctions {
   def kmv_shared_in_union(a: Column, b: Column): Column =
     col(KmvSharedInUnion(ex(a), ex(b)))
 
+  /** A driver-held sketch as a probe operand: use this, not
+    * `lit(bytes)`, whose hex rendering and re-hashing in every plan
+    * description dominates a probe job on a large sketch. */
+  def sketch_lit(bytes: Array[Byte]): Column = col(SketchLiteral(bytes))
   def bloom_contains(sketch: Column, key: Column): Column = col(BloomContains(ex(sketch), ex(key.cast("string"))))
   def sbf_contains(sketch: Column, key: Column): Column = col(SbfContains(ex(sketch), ex(key.cast("string"))))
   def lbf_count(sketch: Column, key: Column): Column = col(LbfCount(ex(sketch), ex(key.cast("string"))))

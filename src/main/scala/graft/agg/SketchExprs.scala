@@ -1,8 +1,9 @@
 package graft.agg
 
 import graft.sketch._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,6 +30,54 @@ trait SketchMemo[S <: AnyRef] {
       lastRef = bytes
     }
     lastSketch
+  }
+}
+
+/**
+ * A driver-held sketch blob as an opaque plan leaf — what the catalog's
+ * `check`/`bulk` probes and the pipeline prefilters put in the plan
+ * instead of `lit(bytes)`. A binary `Literal` costs the DRIVER per
+ * job: every SQL-execution and AQE plan description renders every byte
+ * as hex and canonicalization re-hashes it, which outweighs the probe
+ * itself on a megabyte sketch. This
+ * leaf prints as `sketch(<bytes>B,#<crc32c>)`, hashes by a digest taken
+ * once when it is built (plan copies carry it along), and compares by
+ * content, so `sameResult` and cache lookups still match equal sketches.
+ *
+ * Non-foldable, so ConstantFolding never turns it back into a Literal.
+ * The bytes still reach executors inside the task binary, broadcast
+ * once per stage, exactly as a literal's would; generated code hands
+ * out the SAME array reference every row, so the [[SketchMemo]] parse
+ * memo of the probe above it keeps hitting.
+ */
+case class SketchLiteral(bytes: Array[Byte], digest: Int) extends LeafExpression {
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+
+  override def eval(input: InternalRow): Any = bytes
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    ExprCode.forNonNullValue(
+      JavaCode.global(ctx.addReferenceObj("sketch", bytes, "byte[]"), dataType))
+
+  override def toString: String = f"sketch(${bytes.length}%dB,#$digest%08x)"
+  override def sql: String = toString
+
+  override def hashCode(): Int = digest
+  override def equals(o: Any): Boolean = o match {
+    case that: SketchLiteral =>
+      (that.bytes eq bytes) ||
+        (that.digest == digest && java.util.Arrays.equals(that.bytes, bytes))
+    case _ => false
+  }
+}
+
+object SketchLiteral {
+  def apply(bytes: Array[Byte]): SketchLiteral = {
+    val crc = new java.util.zip.CRC32C
+    crc.update(bytes)
+    SketchLiteral(bytes, crc.getValue.toInt)
   }
 }
 

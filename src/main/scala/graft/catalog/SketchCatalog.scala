@@ -306,11 +306,12 @@ class SketchCatalog(
         val keyCol = keys.columns.head
         val keyed = keys.select(col(keyCol).as("key")).na.drop()
         // contains-check against current state first, like sbf_add.
-        // (The blob rides the plan as a Literal — Spark broadcasts the
-        // task binary once per stage, so a catalog-sized blob ships
-        // once per executor, not per task.)
+        // (The blob rides the plan as an opaque sketch_lit leaf — Spark
+        // broadcasts the task binary once per stage, so a catalog-sized
+        // blob ships once per executor, not per task, and the plan
+        // descriptions print its size and digest, not its bytes.)
         val result = keyed.select(col("key"),
-          (!sbf_contains(lit(beforeBlob), col("key"))).as("added"))
+          (!sbf_contains(sketch_lit(beforeBlob), col("key"))).as("added"))
         // ONE distributed pass computes both the delta sketch (null
         // keys are skipped by the aggregate) and the total key count
         val row = result.agg(
@@ -365,7 +366,7 @@ class SketchCatalog(
         val blob = faultIn(e).serialize()
         val keyCol = keys.columns.head
         val res = keys.select(col(keyCol),
-          sbf_contains(lit(blob), col(keyCol)).as("present"))
+          sbf_contains(sketch_lit(blob), col(keyCol)).as("present"))
         // (hits, total) in one aggregation pass
         val row = res.agg(
           sum(when(col("present"), 1L).otherwise(0L)).as("hits"),
@@ -384,7 +385,7 @@ class SketchCatalog(
   // their filters in ONE distributed job. Shape matters, and it is
   // picked by the number of filters the probe references:
   //   - few filters (<= multiProbeBranchBound): a UNION of per-filter
-  //     probes, each with its own sketch as a plan LITERAL (ships once
+  //     probes, each with its own sketch as a sketch_lit leaf (ships once
   //     per executor in the task binary; codegen'd sbf_contains with a
   //     per-expression memo) — joining against a sketch COLUMN would
   //     re-copy the blob per row (UnsafeRow.getBinary) and thrash the
@@ -443,7 +444,7 @@ class SketchCatalog(
       val branches = blobs.map { case (n, blob) =>
         keyed.filter(col("name") === n)
           .select(col("name"), col("key"),
-            sbf_contains(lit(blob), col("key")).as("present"))
+            sbf_contains(sketch_lit(blob), col("key")).as("present"))
       }
       // persisted: the counters pass and the caller's consumption
       // would otherwise each re-run every probe branch;
@@ -710,7 +711,7 @@ class SketchCatalog(
 object SketchCatalog {
 
   /** Above this many referenced filters, `checkKeysMulti` switches
-    * from the union-of-literal-probes plan (O(branches) re-scans of
+    * from the union-of-sketch_lit-probes plan (O(branches) re-scans of
     * the pair set) to the single-scan broadcast-map shape. 16 keeps
     * small probes on the codegen'd expression path while bounding the
     * worst case at catalog scale. */

@@ -46,6 +46,10 @@ final class WireTcpServer(handler: String => String, port0: Int = 0) {
     try {
       while (!closed) {
         val sock = server.accept()
+        // replies are small and flushed per command: with Nagle on, a
+        // client pipelining several commands per write waits out the
+        // peer's delayed ACK (~40 ms) on every batch
+        sock.setTcpNoDelay(true)
         pool.submit(new Runnable { def run(): Unit = serve(sock) })
       }
     } catch {
@@ -86,6 +90,7 @@ final class WireTcpServer(handler: String => String, port0: Int = 0) {
 object WireTcpClient {
   def session[A](port: Int)(f: (String => String) => A): A = {
     val sock = new Socket("127.0.0.1", port)
+    sock.setTcpNoDelay(true)
     try {
       val in = new BufferedReader(new InputStreamReader(sock.getInputStream, UTF_8))
       val out = new OutputStreamWriter(sock.getOutputStream, UTF_8)

@@ -60,8 +60,8 @@ object Decontam {
 
   /** The eval summary: one scalable-bloom over the distinct eval
     * n-grams. One small driver round-trip for the sketch BYTES (not
-    * row data) — the summary then rides probe plans as a literal,
-    * like q_bloom_prejoin. */
+    * row data) — the summary then rides probe plans as a sketch_lit
+    * leaf, like q_bloom_prejoin. */
   def evalSketch(evalGramsDf: DataFrame, initialCapacity: Long = 100000L,
                  p: Double = 1e-4): Array[Byte] =
     evalGramsDf
@@ -70,13 +70,13 @@ object Decontam {
 
   /** The scrub core SHARED by the batch and streaming operators (the
     * keep rule must stay answer-identical between them): shingled
-    * docs (doc_id, sh) -> (doc_id, n_overlap, keep) via literal-sketch
+    * docs (doc_id, sh) -> (doc_id, n_overlap, keep) via sketch_lit
     * prefilter, exact semi-join verify, per-doc distinct counts. */
   private[graft] def scrubShingled(docsSh: DataFrame, sketch: Array[Byte],
                                    evalGramsDf: DataFrame, maxOverlap: Long): DataFrame = {
     val counts = docsSh
       .select(col("doc_id"), explode(col("sh")).as("g"))
-      .filter(sbf_contains(lit(sketch), col("g")))
+      .filter(sbf_contains(sketch_lit(sketch), col("g")))
       .join(evalGramsDf, Seq("g"), "left_semi") // exact verify: FPs die here
       .groupBy("doc_id")
       .agg(countDistinct(col("g")).as("n_overlap"))

@@ -804,8 +804,8 @@ object PipelineQueries {
 
     // train/eval decontamination: eval = every 7th doc, train = the
     // rest; per-train-doc distinct shared trigrams + strict keep rule.
-    // The sbf prefilter is row-local with the sketch as a plan
-    // literal; the oracle is the plain exact n-gram intersection —
+    // The sbf prefilter is row-local with the sketch as a sketch_lit
+    // plan leaf; the oracle is the plain exact n-gram intersection —
     // identical results prove the prefilter loses nothing
     "pipeline_decontam" -> ((s, dir) => {
       val d = docs(s, dir)
@@ -1041,7 +1041,7 @@ object PipelineQueries {
     }),
 
     // the same scrub always-on: training docs arrive as a stream, the
-    // eval set is static; per-batch literal-sketch prefilter + semi
+    // eval set is static; per-batch sketch_lit prefilter + semi
     // join verify (stateless — no watermark, no state store),
     // changelog sink. SAME oracle as the batch operator: a doc's
     // n-grams ride in one row, so batch boundaries can't change the
@@ -2026,7 +2026,7 @@ object PipelineQueries {
         .head().getAs[Array[Byte]]("sk")
       val orders = s.read.parquet(s"$dir/orders.parquet")
       val pruned = orders.filter(
-        bloom_contains(lit(sketch), col("o_custkey").cast("string")))
+        bloom_contains(sketch_lit(sketch), col("o_custkey").cast("string")))
       pruned.join(broadcast(cust), pruned("o_custkey") === cust("c_custkey"), "left_semi")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),

@@ -160,8 +160,10 @@ final class ScalableBloom(
     pool.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (rung, ls) =>
       val cap = rungCapacity(rung)
       // greedy: OR layers together while the summed count fits the rung
-      // capacity; deterministic given the layer multiset (sort by count)
-      val sorted = ls.map(_._2).sortBy(f => (f.count, f.bitsSet))
+      // capacity; deterministic given the layer multiset (sort by count).
+      // The key is taken once per layer: bitsSet scans the bitmap, and
+      // sortBy would recompute it on every comparison
+      val sorted = ls.map { case (_, f) => ((f.count, f.bitsSet), f) }.sortBy(_._1).map(_._2)
       val acc = ArrayBuffer.empty[BloomFilter]
       sorted.foreach { f =>
         acc.lastOption match {

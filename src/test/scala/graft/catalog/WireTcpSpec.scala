@@ -2,6 +2,9 @@ package graft.catalog
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import java.io.{BufferedReader, InputStreamReader}
+import java.net.Socket
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 /**
@@ -84,6 +87,39 @@ class WireTcpSpec extends AnyFunSuite {
         val size = info.linesIterator.find(_.startsWith("size ")).get.stripPrefix("size ").toLong
         assert(size == 200L)
       }
+    }
+  }
+
+  test("pipelined batches are not held back by Nagle's algorithm") {
+    val cat = new SketchCatalog(spark, Files.createTempDirectory("tcppipe").toString)
+    val wire = new CWireServer(cat)
+    withServer(wire.interpret) { port =>
+      WireTcpClient.session(port) { send =>
+        assert(send("create piped") == "Done")
+        (0 until 8).foreach(i => assert(send(s"set piped in_$i") == "Yes"))
+      }
+      val sock = new Socket("127.0.0.1", port)
+      try {
+        val in = new BufferedReader(new InputStreamReader(sock.getInputStream, UTF_8))
+        val out = sock.getOutputStream
+        // 16 commands per write, then read all 16 replies: with Nagle
+        // on the server, every reply after the first waits for the
+        // client's delayed ACK (~40 ms per batch)
+        val cmds = (0 until 16).map(i => if (i % 2 == 0) s"in_${i / 2}" else s"out_$i")
+        val batch = cmds.map(k => s"c piped $k\n").mkString.getBytes(UTF_8)
+        def roundTrip(): Seq[String] = {
+          out.write(batch)
+          out.flush()
+          cmds.map(_ => in.readLine())
+        }
+        val expected = cmds.map(k => if (k.startsWith("in_")) "Yes" else "No")
+        assert(roundTrip() == expected) // warm the interpreter path
+        val t0 = System.nanoTime()
+        val replies = (0 until 20).map(_ => roundTrip())
+        val elapsedMs = (System.nanoTime() - t0) / 1e6
+        replies.foreach(r => assert(r == expected))
+        assert(elapsedMs < 20 * 40 / 2, s"20 pipelined batches took $elapsedMs ms")
+      } finally sock.close()
     }
   }
 }

@@ -137,6 +137,39 @@ class MergeLawsSpec extends AnyFunSuite {
     })
   }
 
+  test("sbf merge of many same-rung partials packs layers exactly as the (count, bitsSet) ordering") {
+    def partial(id: Int, n: Int) = {
+      val s = ScalableBloom.create(100L, 0.01, 4, 0.9)
+      (0 until n).foreach(i => s.add(s"p${id}_$i".getBytes(UTF_8)))
+      s
+    }
+    // ten rung-0 partials: repeated counts (ties broken by bitsSet) and
+    // sizes whose greedy packing under capacity 100 depends on order
+    val sizes = Seq(40, 15, 60, 40, 25, 90, 15, 33, 60, 10)
+    def partials = sizes.zipWithIndex.map { case (n, id) => partial(id, n) }
+    // the reference ordering: the sort key recomputed per comparison
+    val ref = partials
+    assert(ref.forall(_.layers.map(_._1) == Seq(0)))
+    val cap = ref.head.rungCapacity(0)
+    val expected = scala.collection.mutable.ArrayBuffer.empty[BloomFilter]
+    ref.map(_.layers.head._2).sortBy(f => (f.count, f.bitsSet)).foreach { f =>
+      expected.lastOption match {
+        case Some(last) if last.count + f.count <= cap => last.orInPlace(f)
+        case _ => expected += f
+      }
+    }
+    val (left, right) = partials.splitAt(5)
+    def gather(ps: Seq[ScalableBloom]) = {
+      val s = ps.head
+      s.layers = scala.collection.mutable.ArrayBuffer.from(ps.flatMap(_.layers))
+      s
+    }
+    val merged = gather(left).mergeInPlace(gather(right))
+    assert(expected.size > 1)
+    assert(merged.layers.map(_._1) == Seq.fill(expected.size)(0))
+    assert(merged.layers.map(_._2.serialize().toSeq) == expected.map(_.serialize().toSeq))
+  }
+
   test("lbf merge: multiplicity >= each side's count, <= true multiplicity sum") {
     check(Prop.forAll(splits) { case (ks, i, _) =>
       val (a, b) = ks.splitAt(i)
